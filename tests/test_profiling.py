@@ -282,6 +282,46 @@ def test_exact_quantiles_range_path_matches_other_paths(spark):
         profiling.exact_quantiles(df, "g", range_buckets=4)
 
 
+def test_exact_quantiles_range_path_handles_infinities(spark):
+    """±inf sort below / above every finite value on the default path; the
+    range tier must pin them to the edge buckets and keep them out of the
+    per-group min/max, or the affine bucket map turns them into NaN
+    buckets and their rows drop out of the selection while still counted
+    in n."""
+    inf = float("inf")
+    rows = (
+        [("a", -inf), ("a", 1.0), ("a", 2.0), ("a", 3.0), ("a", inf)]
+        + [("b", inf)] * 3 + [("b", 4.0)]                 # +inf majority
+        + [("c", -inf)] * 2 + [("c", inf)] * 2            # no finite value
+        + [("d", -inf), ("d", 0.5), ("d", float("nan")), ("d", inf)]
+        + [("e", 1e308), ("e", -1e308), ("e", 0.0)]       # finite extremes
+        + [("f", -inf), ("f", None), ("f", 7.0)]
+    )
+    df = spark.createDataFrame(rows, "g string, x double")
+    kw = dict(percents=(1, 20, 25, 40, 50, 60, 75, 80, 100), group_cols=["g"])
+
+    def rows_of(out):
+        return sorted(tuple(map(repr, r)) for r in out.collect())
+
+    want = rows_of(profiling.exact_quantiles(df, "x", **kw))
+    assert len(want) == 6 * 9
+    for b in (1, 2, 3, 16):
+        got = rows_of(profiling.exact_quantiles(df, "x", range_buckets=b, **kw))
+        assert got == want, b
+
+
+@pytest.mark.parametrize("dtype", ["date", "timestamp"])
+def test_exact_quantiles_range_rejects_temporal_columns(spark, dtype):
+    """range_buckets needs arithmetic on the value: a date or timestamp
+    column (which the default path orders fine) gets the named error, not
+    an ANSI cast failure from deep inside the plan."""
+    df = spark.sql(
+        f"SELECT CAST('2020-01-0' || id AS {dtype}) AS x FROM range(1, 6)"
+    )
+    with pytest.raises(ValueError, match="numeric"):
+        profiling.exact_quantiles(df, "x", range_buckets=4)
+
+
 def test_exact_quantiles_rejects_out_of_range_percents(spark):
     import pytest
 

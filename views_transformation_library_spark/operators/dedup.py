@@ -55,16 +55,6 @@ HOT_SHINGLE_BROADCAST_CAP = 1_000_000
 SIZES_BROADCAST_CAP = 4_000_000
 
 
-def _observed_count(obs, metric: str) -> int | None:
-    """Non-blocking read of a single COUNT metric from an Observation:
-    None until some action has populated it (probe with getRowOrEmpty —
-    the JVM getOrEmpty map NPEs via py4j before the metrics row exists)."""
-    jo = getattr(obs, "_jo", None)
-    if jo is None or jo.getRowOrEmpty().isEmpty():
-        return None
-    return int(jo.getOrEmpty().apply(metric))
-
-
 def lsh_guard_stats(df_or_obs, block: bool = False) -> dict | None:
     """Read the hot-bucket guard counters of a capped minhash pipeline
     (VERDICT r6 #3 — capped runs must be distinguishable from exact ones
@@ -110,8 +100,8 @@ def lsh_guard_stats(df_or_obs, block: bool = False) -> dict | None:
         jo = getattr(obs, "_jo", None)
         if jo is None:  # observe() never attached (defensive)
             return None
-        # probe with getRowOrEmpty (an Option — safe pre-action; the JVM
-        # getOrEmpty map NPEs via py4j before the metrics row exists)
+        # probe the row Option first (safe pre-action; the JVM getOrEmpty
+        # map NPEs via py4j before the metrics row exists)
         if jo.getRowOrEmpty().isEmpty():
             return None
         jmap = jo.getOrEmpty()
@@ -225,8 +215,8 @@ def ngram_jaccard_pairs(
     The denominator-join gate's doc count is OBSERVED inside the shingle
     materialize job (CollectMetrics below the tokenizer) instead of a
     separate df.count() job — r10's +0.4 s/query fixed-cost gate job,
-    VERDICT r10 #7. Falls back to df.count() only if no action has run
-    (lazy materialize via SPARK_GRAFT_EAGER_MAT=0)."""
+    VERDICT r10 #7. The eager checkpoint has run by the time the gate
+    reads it, so ``Observation.get`` returns at once."""
     docs_obs = Observation()
     sh = materialize(
         _shingles(
@@ -296,10 +286,7 @@ def ngram_jaccard_pairs(
     # must NEVER be a build side. An explicit hint on the sizes side pins
     # the build side either way; Spark's own estimate picked
     # BuildLeft(inter) at sf5 and collected 6 GB to the driver.
-    n_docs = _observed_count(docs_obs, "__docs")
-    if n_docs is None:  # no action ran yet (lazy materialize mode)
-        n_docs = df.count()
-    if n_docs <= SIZES_BROADCAST_CAP:
+    if docs_obs.get["__docs"] <= SIZES_BROADCAST_CAP:
         sz_a, sz_b = F.broadcast(sz_a), F.broadcast(sz_b)
     else:
         sz_a, sz_b = sz_a.hint("shuffle_hash"), sz_b.hint("shuffle_hash")
@@ -527,7 +514,7 @@ def connected_components(
     und, und_count = materialize_counted(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).distinct()
     )
-    if und_count() <= driver_cap:
+    if und_count <= driver_cap:
         edge_rows = und.collect()
         id_type = dict(pairs.dtypes)[a_col]
         parent: dict = {}
@@ -991,7 +978,7 @@ def pagerank(
     spark = edges.sparkSession
     id_type = dict(edges.dtypes)[src_col]
     scale_f = float(PR_SCALE)
-    if e_count() <= driver_cap:
+    if e_count <= driver_cap:
         # Arrow transfer + vectorized node indexing: .collect()'s Row
         # objects cost ~5 s for 600k edges where toPandas is ~0.5 s off
         # the checkpoint. (r13: a LIMIT cap+1 fusion of gate+pull was
@@ -1024,12 +1011,11 @@ def pagerank(
     # (loop-invariant), the dangling mass stays a LAZY one-row aggregate
     # broadcast into the rank update, and a max|delta| check on the
     # checkpointed LONG frames gives the same early exit as the numpy path.
-    nodes_df, nodes_count = materialize_counted(
+    nodes_df, n_nodes = materialize_counted(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    n_nodes = nodes_count()
     deg = materialize(e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg")))
     base = (1.0 - damping) / n_nodes * PR_SCALE  # same float as pagerank_longs
     tol_q = max(1, int(tol * PR_SCALE))
@@ -1181,7 +1167,7 @@ def decontaminate(
         .distinct()
     )
     eg = egr.withColumn("__hit", F.lit(1))
-    if egr_count() <= EVAL_GRAM_BROADCAST_CAP:
+    if egr_count <= EVAL_GRAM_BROADCAST_CAP:
         eg = F.broadcast(eg)
     per = (
         corpus.join(eg, "shingle", "left")

@@ -2086,21 +2086,6 @@ def pq_encode(
     return vectors.withColumn(out, _enc.asNondeterministic()(F.col(vec_col)))
 
 
-def nearest_cluster_expr_on(arr, centroids: list[list[float]]):
-    """`nearest_cluster_expr` over an arbitrary array expression (used for
-    subspace slices)."""
-    entries = []
-    for i, c in enumerate(centroids):
-        lit_c = F.lit([float(x) for x in c])  # one py4j call (r13)
-        d2 = F.aggregate(
-            F.zip_with(arr, lit_c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        entries.append(F.struct(d2.alias("d2"), F.lit(i).alias("c")))
-    return F.array_sort(F.array(*entries))[0]["c"]
-
-
 # Quantization scale for PQ's ADC partial distances: unit-normalized
 # subspace d² ≤ 4, so floor(d²·2^48) ≤ 2^50 is an exact IEEE floor and the
 # per-candidate sum of m ≤ 64 longs stays far under 2^63 — making the ADC

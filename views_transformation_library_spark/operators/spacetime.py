@@ -40,7 +40,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..panel import KEYS, TIME, UNIT, materialize, one_feature
+from ..panel import KEYS, TIME, UNIT, materialize, materialize_counted, one_feature
 from .spatial_grid import PG_STRIDE, with_grid_coords
 
 PGID_TO_DEGREES = 0.5  # reference spacetime_distance.py:110
@@ -223,9 +223,12 @@ def spacetime_distances(
     col = col or one_feature(df)
     out = out or col
     # every path reads both the events side and the targets side —
-    # materialize the panel once instead of rebuilding it per branch
-    cells = with_grid_coords(materialize(df), stride)
-    events = cells.filter(F.col(col) > 0).select(
+    # materialize the panel once instead of rebuilding it per branch; the
+    # event count that picks the path rides that checkpoint job
+    is_event = F.col(col) > 0
+    pinned, n_events = materialize_counted(df, where=is_event)
+    cells = with_grid_coords(pinned, stride)
+    events = cells.filter(is_event).select(
         F.col(TIME).alias("__te"),
         F.col(UNIT).alias("__ue"),
         F.col("__lon").alias("__elon"),
@@ -234,7 +237,6 @@ def spacetime_distances(
     )
     targets = cells.select(*KEYS, "__lon", "__lat")
 
-    n_events = events.count()  # cheap: filter over the checkpointed panel
     if 0 < n_events <= driver_cap:
         return _slice_knn(targets, events, return_values, k, nu, power, out)
 

@@ -828,12 +828,16 @@ def grid_lag(
     # driver job latency, not data). Only an inconclusive bound pays for an
     # exact count, and only the multi-branch keep_grids path pays for a
     # checkpoint.
-    mesh_bound = (4 * df_count()) // 3 + 1
+    mesh_bound = (4 * df_count) // 3 + 1
     for c in feats:
         mesh = _grid_mesh(nodevals, c, threshold, geo)
-        if keep_grids or mesh_bound > GRID_MESH_BROADCAST_CAP:
-            # referenced from >1 branch, or needs an exact count: pin it
-            mesh = materialize(mesh)
+        mesh_rows = mesh_bound
+        if mesh_bound > GRID_MESH_BROADCAST_CAP:
+            # inconclusive bound: pin the mesh, its exact count riding the
+            # checkpoint job
+            mesh, mesh_rows = materialize_counted(mesh)
+        elif keep_grids:
+            mesh = materialize(mesh)  # referenced from >1 branch
         if keep_grids:
             mesh_frames.append(
                 mesh.select(
@@ -845,10 +849,7 @@ def grid_lag(
         # the mesh is what the adaptive coarsening made small — broadcast it
         # so the cells side never shuffles
         mesh_side = (
-            F.broadcast(mesh)
-            if mesh_bound <= GRID_MESH_BROADCAST_CAP
-            or mesh.count() <= GRID_MESH_BROADCAST_CAP
-            else mesh
+            F.broadcast(mesh) if mesh_rows <= GRID_MESH_BROADCAST_CAP else mesh
         )
         pairs = targets.join(mesh_side, F.col(TIME) == F.col("__mt")).filter(
             ~(

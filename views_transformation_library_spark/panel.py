@@ -15,9 +15,7 @@ the reference (SURVEY.md §7 "positional vs value-based lags").
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 TIME = "time_id"
 UNIT = "unit_id"
@@ -44,88 +42,57 @@ def validate(df: DataFrame) -> DataFrame:
     return df
 
 
-def is_complete(df: DataFrame) -> bool:
-    """Completeness check mirroring the reference's tensorisability assertion
-    (`utilities.py:26-27`): row count == n_times * n_units. Triggers a job —
-    use in tests/debug, not in hot paths."""
-    n, nt, nu = (
-        df.count(),
-        df.select(TIME).distinct().count(),
-        df.select(UNIT).distinct().count(),
-    )
-    return n == nt * nu
-
-
 def materialize(df: DataFrame) -> DataFrame:
     """Materialize a panel once so operators that reference it from several
     plan branches (self-joins, driver-side key collects + the main plan) do
     not re-run the upstream build per branch.
 
-    ``localCheckpoint`` stores the frame's blocks on the executors and
-    truncates lineage — Catalyst does not reuse a duplicated upstream subplan
-    across self-join branches, so without this a panel built from an
-    aggregation pipeline is recomputed for every branch (measured 2-4 full
-    rebuilds per operator at sf0.1). ``eager=False``: the blocks materialize
-    inside the FIRST job that touches the frame (usually a broadcast-distinct
-    subquery) instead of a dedicated blocking job — same once-per-branch
-    compute, one less job launch per panel build (r3 A/B: lazy ≥ eager on
-    every multi-branch query, tools/exp_panel_pin.py). Lineage is truncated
-    at plan-build time either way, so iterative consumers (grid_lag) still
-    cannot OOM the analyzer. Panels are bounded by |T| x |U| rows per
-    feature, so the stored footprint is small relative to the fact data even
-    at 100 TB input; on a cluster, a bucketed persisted panel
-    (``write_bucketed``) serves the same role across *jobs*, this serves it
-    across *branches within one job*. Streaming frames pass through unchanged
-    (checkpointing is a batch concept)."""
+    ``localCheckpoint(eager=True)`` stores the frame's blocks on the
+    executors in one dedicated job and truncates lineage — Catalyst does
+    not reuse a duplicated upstream subplan across self-join branches, so
+    without this a panel built from an aggregation pipeline is recomputed
+    for every branch (measured 2-4 full rebuilds per operator at sf0.1),
+    and iterative consumers (grid_lag) would grow the analyzed plan without
+    bound. Panels are bounded by |T| x |U| rows per feature, so the stored
+    footprint is small relative to the fact data even at 100 TB input; on
+    a cluster, a bucketed persisted panel (``write_bucketed``) serves the
+    same role across *jobs*, this serves it across *branches within one
+    job*. Streaming frames pass through unchanged (checkpointing is a batch
+    concept)."""
     if df.isStreaming:
         return df
-    # eager=True (default since r10). eager=False shared the
-    # materialization with the first consumer job, but when that first
-    # consumer was a broadcast-subquery job racing the main job, the
-    # finisher's doCheckpoint truncated lineage and dropped the only
-    # strong refs to upstream SQLMetric accumulators while the other
-    # job's tasks were in flight — their completion logged a non-fatal
-    # "ERROR DAGScheduler: Failed to update accumulator" on every panel
-    # query (UI metrics only; data, results, timings unaffected —
-    # root-caused r10, repro: tools/repro_accum_gc.py, 50 ERRORs lazy /
-    # 0 eager on the entry flagship). The r3 lazy-wins A/B no longer
-    # holds: the r10 counterbalanced ABBA over the 9 panel-heavy bench
-    # queries at sf0.1 is a wash (lazy 12.551 s vs eager 12.612 s,
-    # 1.00x, per-query ±4% both directions — BENCH_NOTES_r10.md), so
-    # eager buys a clean scheduler log for free. SPARK_GRAFT_EAGER_MAT=0
-    # forces the old lazy behavior (kept reachable for A/Bs).
-    eager = os.environ.get("SPARK_GRAFT_EAGER_MAT", "1") != "0"
-    return df.localCheckpoint(eager=eager)
+    return df.localCheckpoint(eager=True)
 
 
-def materialize_counted(df: DataFrame):
-    """``materialize`` plus a row count riding the SAME checkpoint job.
+def materialize_counted(
+    df: DataFrame, where: Column | None = None
+) -> tuple[DataFrame, int]:
+    """``materialize`` plus a row count taken by the SAME checkpoint job —
+    the one primitive behind every runtime size gate (connected_components'
+    and pagerank's driver caps, grid_lag's mesh bound, decontaminate's
+    broadcast gate, spacetime's event count).
 
-    Size-gated operators (connected_components' driver cap, pagerank's,
-    grid_lag's mesh bound, decontaminate's broadcast gate) all follow
-    materialize-then-count; the dedicated ``.count()`` job is pure driver
-    job latency — the r11 ngram_jaccard observation-counter pattern makes
-    the eager checkpoint job itself produce the count via an unnamed
-    ``Observation`` (a CollectMetrics node; it lives only in the
-    checkpointed plan, so downstream consumers read the plain RDD scan
-    with no pushdown barrier). Returns ``(materialized_df, count_fn)``;
-    ``count_fn()`` reads the observation non-blockingly and falls back to
-    a plain ``.count()`` when no action has populated it (lazy
-    materialize mode, SPARK_GRAFT_EAGER_MAT=0)."""
+    The count is ``count(*)``, or ``count_if(where)`` when a boolean
+    Column ``where`` is given (rows where it is NULL or false are not
+    counted, exactly like ``df.filter(where).count()``). It is collected
+    by an unnamed ``Observation`` (a CollectMetrics node that lives only in
+    the checkpointed plan, so downstream consumers read the plain RDD scan
+    with no pushdown barrier) and read with ``Observation.get`` once the
+    eager checkpoint job has returned — no dedicated ``.count()`` job.
+    Returns ``(materialized_df, count)``. Streaming frames raise
+    ``ValueError``: they cannot be checkpointed, so no job would ever fill
+    the observation."""
     from pyspark.sql import Observation
 
+    if df.isStreaming:
+        raise ValueError(
+            "materialize_counted needs a batch DataFrame: a streaming frame "
+            "is never checkpointed, so its count would never be observed"
+        )
+    metric = F.count(F.lit(1)) if where is None else F.count_if(where)
     obs = Observation()
-    out = materialize(df.observe(obs, F.count(F.lit(1)).alias("__n")))
-
-    def count_fn() -> int:
-        jo = getattr(obs, "_jo", None)
-        # probe with getRowOrEmpty — the JVM getOrEmpty map NPEs via py4j
-        # before the metrics row exists (r8)
-        if jo is None or jo.getRowOrEmpty().isEmpty():
-            return out.count()
-        return int(jo.getOrEmpty().apply("__n"))
-
-    return out, count_fn
+    out = materialize(df.observe(obs, metric.alias("__n")))
+    return out, int(obs.get["__n"])
 
 
 # The PRIO-GRID unit axis is structurally bounded at 720 x 360 = 259,200

@@ -72,15 +72,6 @@ def read_json(
     return reader.json(path)
 
 
-def read_jdbc(spark: SparkSession, url: str, table: str, **options) -> DataFrame:
-    """JDBC source (needs the driver jar on the classpath; partition with
-    partitionColumn/lowerBound/upperBound/numPartitions for parallel reads)."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    return reader.load()
-
-
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -161,15 +152,6 @@ def read_stream_parquet(
     for k, v in options.items():
         reader = reader.option(k, str(v))
     return reader.parquet(path)
-
-
-def read_delta(spark: SparkSession, path: str) -> DataFrame:  # pragma: no cover - env
-    try:
-        return spark.read.format("delta").load(path)
-    except Exception as exc:
-        raise NotImplementedError(
-            "Delta Lake jars are not on the classpath in this environment"
-        ) from exc
 
 
 def zorder_key_sql(cols: list[str], bits: int = 16, dialect: str = "spark") -> str:
