@@ -33,6 +33,24 @@ def test_chained_windows_share_one_shuffle(spark):
     assert plans.count_exchanges(chained) == 1
 
 
+def test_tree_and_grid_lags_scan_local_tables(spark):
+    """The driver-built interaction, boundary, weight and kernel tables are
+    LocalTableScans; the only ExistingRDD leaves left are materialize pins,
+    none of which a Python worker has to feed."""
+    from views_transformation_library_spark.operators import trees
+
+    pgs = [0, 1, 2, 720, 721, 722, 1440, 1441]
+    pn = make_panel(spark, [(t, p, float(t + i)) for t in range(3) for i, p in enumerate(pgs)])
+    for out in (
+        trees.grid_lag(pn, 0.5, 0),
+        trees.spatial_tree_lag(pn, 0.5, 0),
+        trees.temporal_tree_lag(pn, 0.5, "uniform"),
+        spatial_grid.splag4d(pn, 1, 1, 0, 0),
+    ):
+        assert "LocalTableScan" in plans.physical_plan(out)
+        assert plans.python_scans(out) == 0
+
+
 def test_splag4d_broadcasts_kernel(spark):
     pn = make_panel(spark, [(1, p, 1.0) for p in [0, 1, 720, 721]])
     out = spatial_grid.splag4d(pn, 1, 1, 0, 0)
@@ -259,6 +277,25 @@ def test_no_corpus_linear_single_partition_windows():
         if n:
             counts[p.name] = n
     assert counts == {"retrieval.py": 1, "sampling.py": 2, "text.py": 3}, counts
+
+
+def test_driver_tables_only_via_local_frame():
+    """Grep-able invariant: the package builds every driver-side table with
+    ``panel.local_frame`` (an Arrow LocalRelation). The allowlist is EXACT —
+    its one ``createDataFrame(`` call; a row-list ``createDataFrame``
+    anywhere else is a PythonRDD that starts a Python worker per core on
+    every action, and fails this test."""
+    import pathlib
+
+    import views_transformation_library_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    counts: dict[str, int] = {}
+    for p in sorted(root.rglob("*.py")):
+        n = p.read_text().count("createDataFrame(")
+        if n:
+            counts[str(p.relative_to(root))] = n
+    assert counts == {"panel.py": 1}, counts
 
 
 def test_pack_windows_two_level_shard_bases(spark, monkeypatch):

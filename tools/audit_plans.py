@@ -2,7 +2,10 @@
 with the plan features the 100 TB story hinges on — shuffle exchange
 count, broadcast count, whether the parquet scan carries PushedFilters /
 a pruned ReadSchema, single-partition exchange count (should be 0 or a
-documented bounded input), and Arrow/python boundary counts.
+documented bounded input), Arrow/python boundary counts, and the
+driver-built tables: LocalTableScan leaves (``panel.local_frame``) and
+ExistingRDD leaves fed by a PythonRDD (a row-list ``createDataFrame``,
+which should be 0).
 
 Emits a markdown table (stdout) — committed per round as PLANS_r{N}.md so
 the judge can read the plans' shape without rerunning anything. Queries
@@ -52,9 +55,13 @@ def main() -> None:
     print("per task) and (b) pack_windows' supershard-totals window inside")
     print("llm_pipeline — N/(shard_size x 65536) rows by construction")
     print("(tests/test_plans.py pins the unpartitioned-window allowlist).")
+    print("`local scans` counts LocalTableScan leaves (driver-built tables")
+    print("from `panel.local_frame`); `python scans` counts ExistingRDD leaves")
+    print("whose RDD lineage holds a PythonRDD, which must stay 0.")
     print()
-    print("| query | shuffles | broadcasts | single-part ex | pushed filters | arrow ops |")
-    print("|---|---|---|---|---|---|")
+    print("| query | shuffles | broadcasts | single-part ex | pushed filters "
+          "| arrow ops | local scans | python scans |")
+    print("|---|---|---|---|---|---|---|---|")
     for name in list(HEADLINE) + [e for e in extra if e not in HEADLINE]:
         if name not in qs:
             continue
@@ -62,7 +69,7 @@ def main() -> None:
             df = qs[name](spark, sf_dir)
             p = plans.physical_plan(df)
         except Exception as exc:  # pragma: no cover - audit robustness
-            print(f"| {name} | ERROR: {str(exc)[:60]} | | | | |")
+            print(f"| {name} | ERROR: {str(exc)[:60]} | | | | | | |")
             continue
         shuffles = p.count("Exchange hashpartitioning") + p.count(
             "Exchange rangepartitioning"
@@ -80,7 +87,7 @@ def main() -> None:
         )
         print(
             f"| {name} | {shuffles} | {bcasts} | {single} | {pushed} "
-            f"| {arrow} |"
+            f"| {arrow} | {p.count('LocalTableScan')} | {plans.python_scans(df)} |"
         )
 
 

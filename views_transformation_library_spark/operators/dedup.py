@@ -26,7 +26,7 @@ import random
 
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 
-from ..panel import materialize, materialize_counted
+from ..panel import local_frame, materialize, materialize_counted
 
 logger = logging.getLogger(__name__)
 
@@ -541,8 +541,8 @@ def connected_components(
             if r not in roots or v < roots[r]:
                 roots[r] = v
         labels = [(v, roots[find(v)]) for v in sorted(parent)]
-        return pairs.sparkSession.createDataFrame(
-            labels, schema=f"node {id_type}, component {id_type}"
+        return local_frame(
+            pairs.sparkSession, labels, f"node {id_type}, component {id_type}"
         )
     edges = (
         und.union(und.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -980,29 +980,24 @@ def pagerank(
     scale_f = float(PR_SCALE)
     if e_count <= driver_cap:
         # Arrow transfer + vectorized node indexing: .collect()'s Row
-        # objects cost ~5 s for 600k edges where toPandas is ~0.5 s off
-        # the checkpoint. (r13: a LIMIT cap+1 fusion of gate+pull was
-        # tried and reverted — CollectLimit's incremental scale-up runs
-        # several sequential jobs and measured 2.09x slower here.)
-        pdf = e.toPandas()
+        # objects cost ~5 s for 600k edges where an Arrow pull is ~0.5 s
+        # off the checkpoint. toArrow, unlike toPandas, is Arrow whatever
+        # spark.sql.execution.arrow.pyspark.enabled says. (r13: a LIMIT
+        # cap+1 fusion of gate+pull was tried and reverted —
+        # CollectLimit's incremental scale-up runs several sequential
+        # jobs and measured 2.09x slower here.)
+        tbl = e.toArrow()
         nodes_arr, q = pagerank_longs(
-            pdf["src"].to_numpy(), pdf["dst"].to_numpy(), damping, max_iters, tol
+            tbl.column("src").to_numpy(), tbl.column("dst").to_numpy(),
+            damping, max_iters, tol,
         )
-        if nodes_arr.size == 0:
-            return spark.createDataFrame(
-                [], schema=f"node {id_type}, pagerank double"
-            )
-        # Arrow frame out, mirroring the Arrow pull in: the tuple-list
-        # path pickled every row (r13 opt). Vectorized q/scale is the
-        # same correctly-rounded IEEE division as the old per-element
-        # float(qv)/scale_f — the strict gate's doubles are unchanged.
-        import pandas as pd
-
-        out_pdf = pd.DataFrame(
-            {"node": nodes_arr, "pagerank": q.astype("float64") / scale_f}
-        )
-        return spark.createDataFrame(
-            out_pdf, schema=f"node {id_type}, pagerank double"
+        # vectorized q/scale is the same correctly-rounded IEEE division
+        # as a per-element float(qv)/scale_f — the strict gate's doubles
+        # are unchanged; an empty graph gives the empty frame
+        return local_frame(
+            spark,
+            zip(nodes_arr.tolist(), (q.astype("float64") / scale_f).tolist()),
+            f"node {id_type}, pagerank double",
         )
     # distributed path. Per-iteration job budget matters as much as data
     # volume (measured at sf0.1: the original loop spent 2 driver actions

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..panel import local_frame
+
 _SUM_DECIMAL = "decimal(38,6)"
 
 
@@ -362,7 +364,7 @@ def approx_quantiles_hist(
         F.sum("__c").over(wg).alias("__n"),
     )
     spark = df.sparkSession
-    pcts = spark.createDataFrame([(int(p),) for p in percents], "percent int")
+    pcts = local_frame(spark, [(int(p),) for p in percents], "percent int")
     joined = cum.crossJoin(F.broadcast(pcts))
     rank = F.expr("CAST((percent * __n + 99) DIV 100 AS BIGINT)")
     picked = joined.filter(
@@ -453,7 +455,7 @@ def _exact_quantiles_range(
     wo = Window.partitionBy(*[F.col(c) for c in group_cols]).orderBy("__b")
     cum = hist.withColumn("__cum", F.sum("__bc").over(wo))
     spark = df.sparkSession
-    pcts = spark.createDataFrame([(int(p),) for p in percents], "percent int")
+    pcts = local_frame(spark, [(int(p),) for p in percents], "percent int")
     rank = F.expr("CAST((percent * __n + 99) DIV 100 AS BIGINT)")
     targets = (
         cum.crossJoin(F.broadcast(pcts))
@@ -602,7 +604,7 @@ def exact_quantiles(
             )
         )
     spark = df.sparkSession
-    pcts = spark.createDataFrame([(int(p),) for p in percents], "percent int")
+    pcts = local_frame(spark, [(int(p),) for p in percents], "percent int")
     joined = cum.crossJoin(F.broadcast(pcts))
     rank = F.expr("CAST((percent * __n + 99) DIV 100 AS BIGINT)")
     picked = joined.filter(

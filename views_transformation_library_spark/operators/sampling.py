@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..panel import local_frame
+
 _BUCKETS = 1 << 32
 
 
@@ -399,10 +401,7 @@ def dsir_weights(
     wmap = dsir_bucket_weights(
         ((r["bucket"], r["ct"], r["cr"]) for r in counts), n_buckets, alpha
     )
-    spark = df.sparkSession
-    wdf = spark.createDataFrame(
-        sorted(wmap.items()), "bucket long, __q long"
-    )
+    wdf = local_frame(df.sparkSession, sorted(wmap.items()), "bucket long, __q long")
     per = (
         occ.join(F.broadcast(wdf), "bucket")
         .groupBy("doc", "is_target")

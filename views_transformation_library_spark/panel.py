@@ -15,7 +15,12 @@ the reference (SURVEY.md §7 "positional vs value-based lags").
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 TIME = "time_id"
 UNIT = "unit_id"
@@ -93,6 +98,67 @@ def materialize_counted(
     obs = Observation()
     out = materialize(df.observe(obs, metric.alias("__n")))
     return out, int(obs.get["__n"])
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A driver-built table (tree interactions, kernel offsets, distance
+    weights, codebooks, percent lists, driver-path results) as a Spark
+    frame whose plan is a ``LocalTableScan``.
+
+    ``schema`` is a DDL string or a ``StructType``. The row tuples become
+    a ``pyarrow.Table`` typed by ``to_arrow_schema`` and enter the plan as
+    a LocalRelation: no pickling, no PythonRDD, no Python worker, and no
+    dependence on ``spark.sql.execution.arrow.pyspark.enabled``.
+    ``createDataFrame`` on a list of rows instead pickles and
+    parallelizes them into a PythonRDD, so every action on the plan
+    starts one Python-worker task per core (CLAUDE.md has the grid_lag
+    numbers).
+
+    Values convert only without loss: an integer (``int``,
+    ``np.integer``) goes into any integer column it fits or any floating
+    column that holds it exactly; every other value must already be of
+    its column's kind. A string, bool or float in an integer column, a
+    number in a string column, an out-of-range integer or a row of the
+    wrong width raises (``TypeError``, ``ValueError`` or
+    ``pyarrow.ArrowInvalid``). NULL, NaN, ±inf and -0.0 pass through
+    bit-for-bit; an empty ``rows`` gives a 0-row frame with the schema."""
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow_schema)
+    if len(cols) != len(arrow_schema):
+        raise ValueError(
+            f"rows have {len(cols)} fields but the schema "
+            f"{struct.simpleString()} has {len(arrow_schema)}"
+        )
+    arrays = []
+    for values, field in zip(cols, arrow_schema):
+        # inferred first, so a float never truncates into an integer
+        # column; the safe cast then range-checks integers
+        arr = pa.array(values)
+        if not _widens(arr.type, field.type):
+            raise TypeError(
+                f"column {field.name!r} is {field.type} but its values "
+                f"are {arr.type}"
+            )
+        arrays.append(arr.cast(field.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=struct)
+
+
+def _widens(got, want) -> bool:
+    """Whether inferred Arrow type ``got`` converts to ``want`` without
+    loss: equal, all-NULL, integer to integer or floating (the safe cast
+    raises on a value out of range or not exact), or lists of such."""
+    t = pa.types
+    if got == want or t.is_null(got):
+        return True
+    if t.is_integer(got):
+        return t.is_integer(want) or t.is_floating(want)
+    if t.is_list(got) and t.is_list(want):
+        return _widens(got.value_type, want.value_type)
+    return False
 
 
 # The PRIO-GRID unit axis is structurally bounded at 720 x 360 = 259,200

@@ -40,3 +40,17 @@ def read_schema(df: DataFrame) -> str:
     """ReadSchema of the parquet scan ('' if no file scan)."""
     m = re.search(r"ReadSchema: ([^\n]*)", physical_plan(df))
     return m.group(1) if m else ""
+
+
+def python_scans(df: DataFrame) -> int:
+    """``Scan ExistingRDD`` leaves whose RDD lineage holds a PythonRDD —
+    rows a Python worker must produce on every action (a
+    ``createDataFrame`` of a row list). ``materialize`` pins are the
+    other ExistingRDD leaves; their lineage stops at the checkpoint."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    scans = (leaves.apply(i) for i in range(leaves.size()))
+    return sum(
+        "PythonRDD" in s.rdd().toDebugString()
+        for s in scans
+        if s.nodeName() == "Scan ExistingRDD"
+    )
